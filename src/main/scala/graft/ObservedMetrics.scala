@@ -66,6 +66,10 @@ object ObservedMetrics {
 
   def gaugeSnapshot: Map[String, Double] = gauges.toMap
 
+  /** Remove gauges — test-only: a spec that drives a gauge-recording
+    * path restores the JVM-wide registry other specs assert on. */
+  private[graft] def dropGauges(names: Seq[String]): Unit = names.foreach(gauges.remove)
+
   /** Wait (bounded) until the listener bus has drained: the snapshot is
     * considered settled once it stops changing for `quietMs`. */
   def awaitQuiescent(quietMs: Long = 500, timeoutMs: Long = 10000): Map[String, Long] = {

@@ -49,6 +49,32 @@ object IvfKernels {
     else if (java.lang.Double.isNaN(y)) -1
     else java.lang.Double.compare(x, y)
 
+  /** `round6(cosine_sim(x, centroid k))` over the `n` elements of `xa`
+    * — [[CosineSim]]'s per-accumulator summation order. The caller has
+    * checked `xa` for null elements and the matrix for shape. */
+  private def roundedCos(xa: ArrayData, n: Int, cents: Array[Double], k: Int,
+      isFloat: Boolean): Double = {
+    var dot = 0.0
+    var nx = 0.0
+    var ny = 0.0
+    var i = 0
+    while (i < n) {
+      val xi = if (isFloat) xa.getFloat(i).toDouble else xa.getDouble(i)
+      val yi = cents(k * n + i)
+      dot += xi * yi
+      nx += xi * xi
+      ny += yi * yi
+      i += 1
+    }
+    round6(dot / (java.lang.Math.sqrt(nx) * java.lang.Math.sqrt(ny)))
+  }
+
+  /** Whether cosine against the index is defined for `xa`: non-null,
+    * no null element, and the index's dimension. */
+  private def scorable(xa: ArrayData, c: Int, cents: Array[Double]): Boolean =
+    xa != null && c > 0 && cents.length == c * xa.numElements() &&
+      (0 until xa.numElements()).forall(i => !xa.isNullAt(i))
+
   /** Assignment: returns `(nc, cid)` as an InternalRow — `nc` = the
     * NEGATED rounded cosine to the winning centroid, `cid` = its id;
     * null on a null element or a dimension mismatch (the composable
@@ -58,28 +84,15 @@ object IvfKernels {
     * instead). */
   def assign(xa: ArrayData, ids: Array[Long], cents: Array[Double],
       isFloat: Boolean): InternalRow = {
-    val n = xa.numElements()
     val c = ids.length
-    if (c == 0 || cents.length != c * n) return null
+    if (!scorable(xa, c, cents)) return null
+    val n = xa.numElements()
     var bestNc = 0.0
     var bestId = 0L
     var have = false
     var k = 0
     while (k < c) {
-      var dot = 0.0
-      var nx = 0.0
-      var ny = 0.0
-      var i = 0
-      while (i < n) {
-        if (xa.isNullAt(i)) return null
-        val xi = if (isFloat) xa.getFloat(i).toDouble else xa.getDouble(i)
-        val yi = cents(k * n + i)
-        dot += xi * yi
-        nx += xi * xi
-        ny += yi * yi
-        i += 1
-      }
-      val nc = -round6(dot / (java.lang.Math.sqrt(nx) * java.lang.Math.sqrt(ny)))
+      val nc = -roundedCos(xa, n, cents, k, isFloat)
       val c0 = if (have) cmp(nc, bestNc) else -1
       if (c0 < 0 || (c0 == 0 && ids(k) < bestId)) {
         bestNc = nc
@@ -89,6 +102,30 @@ object IvfKernels {
       k += 1
     }
     new GenericInternalRow(Array[Any](bestNc, bestId))
+  }
+
+  /** The `np` cells a query vector probes, best first: the centroid ids
+    * ordered by `(ccos DESC, cent_id)` with ccos = [[assign]]'s rounded
+    * cosine, under Spark's sort semantics — `SQLOrderingUtil`'s double
+    * order (NaN greatest, -0.0 = 0.0) and NULLS LAST for a descending
+    * key. A null vector, a null element or a dimension mismatch makes
+    * every ccos null, so the ids alone order the probe. This is the
+    * ranking the engine ran as `centroids × query` sorted and limited,
+    * computed on the driver without a job. */
+  def probeCells(xa: ArrayData, ids: Array[Long], cents: Array[Double],
+      isFloat: Boolean, np: Int): Seq[Long] = {
+    val c = ids.length
+    val byId = (0 until c).sortBy(ids(_))
+    val ranked =
+      if (!scorable(xa, c, cents)) byId
+      else {
+        val n = xa.numElements()
+        val ccos = Array.tabulate(c)(k => roundedCos(xa, n, cents, k, isFloat))
+        byId.sortWith((a, b) =>
+          org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+            .compareDoubles(ccos(a), ccos(b)) > 0)
+      }
+    ranked.take(np).map(ids(_))
   }
 
   /** Centroid lookup: the winning cell's centroid VECTOR, or null when

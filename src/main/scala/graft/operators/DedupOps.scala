@@ -743,7 +743,7 @@ object DedupOps {
     * argmin evaluated as a window over the cluster — ONE evaluation of
     * the members subtree (opt r20; the PlanSpec guard documents the
     * skew trade this accepts). */
-  private def keepBestElection(docs: DataFrame, groups: DataFrame): DataFrame = {
+  private[graft] def keepBestElection(docs: DataFrame, groups: DataFrame): DataFrame = {
     val quality = TextOps.textQualityScore(docs)
       .select(col("doc_id"), col("quality"))
     val members = groups.select(col("doc_id"), col("cluster"), col("cluster_size"))
@@ -1114,14 +1114,10 @@ object DedupOps {
           posexplode(col("bands")).as(Seq("band", "sig")))
         .select(col("band"), col("sig"), col("doc_id"),
           sigPrefix(col("sig")).as("sp"))
-      graft.util.StagedArtifacts.noteAppend(bandDir, bandRows)
-      bandRows
-        .write.mode("append").partitionBy("sp").parquet(bandDir.toString)
+      graft.util.StagedArtifacts.append(bandDir, bandRows, "sp")
       val shRows = sigs.select(col("doc_id"), col("sh"),
         Hashing.md5Bucket(col("doc_id"), DocBucketParts).cast("int").as("db"))
-      graft.util.StagedArtifacts.noteAppend(shDir, shRows)
-      shRows
-        .write.mode("append").partitionBy("db").parquet(shDir.toString)
+      graft.util.StagedArtifacts.append(shDir, shRows, "db")
       graft.util.ServingManifest.addCounter(sfDir, TextAppendsFamily,
         TextTables, bandDir.toString, n)
       n
@@ -1245,14 +1241,10 @@ object DedupOps {
     val shDir = shingleIdxDir(spark, sfDir)
     val obs = org.apache.spark.sql.Observation()
     val bandTs = tombstoneRowsFor(spark, bandDir, ids, "doc_id", "sp")
-    graft.util.StagedArtifacts.noteAppend(bandDir, bandTs)
-    bandTs
-      .observe(obs, count(lit(1)).as("n"))
-      .write.mode("append").partitionBy("sp").parquet(bandDir.toString)
+    graft.util.StagedArtifacts.append(bandDir,
+      bandTs.observe(obs, count(lit(1)).as("n")), "sp")
     val shTs = tombstoneRowsFor(spark, shDir, ids, "doc_id", "db")
-    graft.util.StagedArtifacts.noteAppend(shDir, shTs)
-    shTs
-      .write.mode("append").partitionBy("db").parquet(shDir.toString)
+    graft.util.StagedArtifacts.append(shDir, shTs, "db")
     graft.ObservedMetrics.recordGauge("text.tombstoned_docs",
       obs.get("n").asInstanceOf[Long].toDouble)
   }
@@ -1340,8 +1332,7 @@ object DedupOps {
       ids: DataFrame, m: MediaModality = ImageModality): Unit = {
     val dir = mediaBandIdxDir(spark, sfDir, m)
     val ts = tombstoneRowsFor(spark, dir, ids, "media_id", "mp")
-    graft.util.StagedArtifacts.noteAppend(dir, ts)
-    ts.write.mode("append").partitionBy("mp").parquet(dir.toString)
+    graft.util.StagedArtifacts.append(dir, ts, "mp")
   }
 
   /** [[dropTextTombstones]] for a media modality. */
@@ -1768,9 +1759,7 @@ object DedupOps {
       val blockRows = mediaBlocksOf(fp)
         .select(col("blk"), col("blk_val"), col("media_id"), col("dhash"),
           mediaBlockPrefix(col("blk"), col("blk_val")).as("mp"))
-      graft.util.StagedArtifacts.noteAppend(dir, blockRows)
-      blockRows
-        .write.mode("append").partitionBy("mp").parquet(dir.toString)
+      graft.util.StagedArtifacts.append(dir, blockRows, "mp")
       graft.util.ServingManifest.addCounter(sfDir, MediaAppendsFamily,
         MediaTables, dir.toString, n)
       n

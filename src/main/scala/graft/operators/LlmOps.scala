@@ -255,39 +255,21 @@ object LlmOps {
     * ad-mangled mirror, the kept one should be chosen by the quality
     * signal the pipeline already computes, not by crawl order.
     *
-    * Scale shape: quality is computed corpus-wide as a pure per-row
-    * projection and joined to the cluster assignment on doc_id — the
-    * join ships ONE double per document, never text (joining raw docs to
-    * clusters and scoring after would shuffle the corpus's text bytes).
-    * The cluster side is duplicate-density-unbounded, so no broadcast
-    * hint (the verified-dups discipline; AQE may still elect one at
-    * runtime). The election itself is a partial-combinable `min_by`
-    * AGGREGATE — each cluster's winner reduces map-side — and the
-    * winner flags back through a cluster-keyed JOIN, which AQE can
-    * skew-split; the obvious rank-1 window would sort each cluster in
-    * ONE task, un-splittable for the mega-cluster (identical
-    * boilerplate) case. Pass a staged `dupGroups` artifact in
-    * production (the [[docFilterPipeline]] parameter precedent);
-    * omitted, clusters derive from `docs` cold.
+    * The election is [[DedupOps.keepBestElection]], shared with the
+    * cross-modal keys. Quality is a pure per-row projection joined to
+    * the cluster assignment on doc_id — the join ships ONE double per
+    * document, never text. The winner is a `min_by` argmin evaluated as
+    * a window over the cluster, so the members subtree (docs scan +
+    * quality kernel + groups join) runs in a SINGLE scan with one
+    * exchange on `cluster`. The accepted cost is skew: a mega-cluster
+    * (identical boilerplate) lands in one task, which the window cannot
+    * split (the PlanSpec guard records this trade). Pass a staged
+    * `dupGroups` artifact in production (the [[docFilterPipeline]]
+    * parameter precedent); omitted, clusters derive from `docs` cold.
     */
   def docKeepBest(docs: DataFrame,
-      dupGroups: Option[DataFrame] = None): DataFrame = {
-    val groups = dupGroups.getOrElse(DedupOps.docDupGroups(docs))
-      .select(col("doc_id"), col("cluster"), col("cluster_size"))
-    val quality = TextOps.textQualityScore(docs)
-      .select(col("doc_id"), col("quality"))
-    val members = groups.join(quality, Seq("doc_id"))
-    // single-scan election — the same window-fold as
-    // [[DedupOps.keepBestElection]] (opt r20): the aggregate-then-rejoin
-    // shape evaluated the members subtree (docs scan + quality kernel +
-    // groups join) twice; the window runs it once for identical winners.
-    members
-      .withColumn("keep_id",
-        min_by(col("doc_id"), struct(negate(col("quality")), col("doc_id")))
-          .over(org.apache.spark.sql.expressions.Window.partitionBy("cluster")))
-      .select(col("doc_id"), col("cluster"), col("cluster_size"), col("quality"),
-        (col("doc_id") === col("keep_id")).cast("int").as("keep"))
-  }
+      dupGroups: Option[DataFrame] = None): DataFrame =
+    DedupOps.keepBestElection(docs, dupGroups.getOrElse(DedupOps.docDupGroups(docs)))
 
   // ---------------------------------------------------------------------
   // Driver-contract wiring

@@ -935,8 +935,11 @@ object StreamOps {
             // separate distinct-collect job inside the merge body is
             // skipped (opt r20)
             val gateObs = org.apache.spark.sql.Observation()
+            // endpoints cast to long first, as the merge's own edge
+            // canonicalisation does: a double-typed topic would hash
+            // "5.0" and prune the wrong buckets
             val db = (c: String) => graft.operators.Hashing
-              .md5Bucket(col(c), DedupOps.DocBucketParts).cast("int")
+              .md5Bucket(col(c).cast("long"), DedupOps.DocBucketParts).cast("int")
             val gated = batch.observe(gateObs,
               count(lit(1)).as("n"),
               collect_set(db("doc_a")).as("dba"),

@@ -67,22 +67,31 @@ object StagedArtifacts {
     spark.read.schema(s).parquet(dir.toString)
   }
 
-  /** Cache-soundness hook for the IN-PLACE append sites (r19 ADVICE):
-    * [[readStaged]]'s per-dir cache is sound only while appends never
-    * add a column — a writer appending a wider frame (say a future
-    * `deleted` flag on a new partition) would otherwise have that
-    * column silently dropped from every subsequent cached read. Called
-    * with the frame ABOUT to append: a frame whose columns all exist in
-    * the cached schema keeps the cache (today's tombstone/index appends
-    * — they project to the index's own schema); any new column DROPS
-    * the entry so the next read re-infers and sees it. No-op when the
-    * dir has no cached entry yet. */
-  def noteAppend(dir: Path, df: DataFrame): Unit =
+  /** Append `df` into the staged dir `dir`, partitioned by
+    * `partitionCol` — the one write every IN-PLACE append site makes —
+    * keeping [[readStaged]]'s per-dir schema cache sound (r19 ADVICE):
+    * the cache holds only while every appended data column matches the
+    * cached one by name AND type (nullability aside). A frame bringing a
+    * new column (say a future `deleted` flag) or a changed type (a
+    * widened id) DROPS the entry, so the next read re-infers and sees
+    * it instead of silently dropping or coercing it. The partition
+    * column is checked by name only: its read type is inferred from the
+    * directory names, not taken from the frame. Today's tombstone and
+    * index appends project to the index's own schema and keep the
+    * cache. */
+  def append(dir: Path, df: DataFrame, partitionCol: String): Unit = {
+    def keys(s: org.apache.spark.sql.types.StructType) = s.fields.map(f =>
+      f.name -> (if (f.name == partitionCol) "" else f.dataType.catalogString)).toSet
     Option(schemaCache.get(dir.toString)).foreach { s =>
-      val cached = s.fieldNames.toSet
-      if (!df.schema.fieldNames.forall(cached.contains))
-        { schemaCache.remove(dir.toString); () }
+      if (!keys(df.schema).subsetOf(keys(s))) schemaCache.remove(dir.toString)
     }
+    df.write.mode("append").partitionBy(partitionCol).parquet(dir.toString)
+  }
+
+  /** The schema [[readStaged]] holds for `dir`, if any (test
+    * observability). */
+  private[graft] def cachedSchema(dir: Path): Option[org.apache.spark.sql.types.StructType] =
+    Option(schemaCache.get(dir.toString))
 
   /** The per-JVM temp variant returning the DIRECTORY — for consumers
     * that need the path itself (a streaming file source reading a

@@ -1,6 +1,6 @@
 package graft.util
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 /** Content stamp of the fixture files a staged artifact derives from —
   * the staleness key for [[StampedMemo]]. Folds every file's (relative
@@ -13,27 +13,33 @@ import java.nio.file.{Files, Paths}
   */
 object CorpusStamp {
 
-  def of(sfDir: String, tables: Seq[String]): Long = {
-    var h = 1125899906842597L
+  private val Seed = 1125899906842597L
+
+  def of(sfDir: String, tables: Seq[String]): Long =
+    tables.foldLeft(Seed)((h, t) =>
+      mixTree(h * 31 + t.hashCode, Paths.get(sfDir, s"$t.parquet")))
+
+  /** The stamp of one file tree: every entry's relative path, and each
+    * file's size and mtime. */
+  def ofTree(root: Path): Long = mixTree(Seed, root)
+
+  private def mixTree(h0: Long, root: Path): Long = {
+    var h = h0
     def mix(v: Long): Unit = h = h * 31 + v
-    tables.foreach { t =>
-      val root = Paths.get(sfDir, s"$t.parquet")
-      mix(t.hashCode.toLong)
-      if (Files.exists(root)) {
-        val walk = Files.walk(root)
-        try {
-          val it = walk.sorted().iterator()
-          while (it.hasNext) {
-            val p = it.next()
-            mix(root.relativize(p).toString.hashCode.toLong)
-            if (Files.isRegularFile(p)) {
-              mix(Files.size(p))
-              mix(Files.getLastModifiedTime(p).toMillis)
-            }
+    if (Files.exists(root)) {
+      val walk = Files.walk(root)
+      try {
+        val it = walk.sorted().iterator()
+        while (it.hasNext) {
+          val p = it.next()
+          mix(root.relativize(p).toString.hashCode.toLong)
+          if (Files.isRegularFile(p)) {
+            mix(Files.size(p))
+            mix(Files.getLastModifiedTime(p).toMillis)
           }
-        } finally walk.close()
-      } else mix(-1L)
-    }
+        }
+      } finally walk.close()
+    } else mix(-1L)
     h
   }
 }

@@ -336,12 +336,15 @@ class PlanSpec extends SparkTestBase {
     assert(p.contains("bpe_encode") && p.contains("bpe_decode"), p)
   }
 
-  test("ann_del serve keeps the cell prune and broadcasts the tombstone exclusions") {
+  test("ann_del serve keeps the cell prune and inlines the tombstone exclusions") {
     // the takedown serve must keep the servedIndex scale shape: the
     // probe's cell filter still prunes the base index scan, and every
-    // tombstone-driven exclusion (base anti-join on segment ids,
-    // live-side anti-join on tombstone ids) builds from the bounded
-    // overlay — broadcast, never a sort-merge over the corpus. The
+    // tombstone-driven exclusion (base side on segment ids, live side on
+    // tombstone ids) comes from the bounded overlay — never a sort-merge
+    // or a shuffle over the corpus. The overlay is under
+    // MaxOverlayIds, so both exclusions ride the scans as inline InSet
+    // filters from the memoised overlay view: no anti-join, no per-read
+    // broadcast (the above-cap broadcast form is guarded below). The
     // contract key materializes its output (the epoch-sink discipline),
     // so the plan is taken from the serve frame directly, overlay
     // registered exactly as annDeleteServe registers it.
@@ -365,6 +368,34 @@ class PlanSpec extends SparkTestBase {
         .queryExecution.executedPlan.toString
       assert(p.contains("PartitionFilters: [cell#"), p)
       assert(!p.contains("SortMergeJoin"), p)
+      assert(!p.contains("Exchange hashpartitioning(vec_id"), p)
+      assert(!p.contains("LeftAnti"), p)
+      assert("NOT vec_id#\\d+L? INSET".r.findAllIn(p).size >= 2, p)
+    } finally SimilarityOps.dropIndexSegments(sfDir)
+  }
+
+  test("ann_del serve above the overlay-id cap broadcasts the tombstone exclusions") {
+    // an overlay past MaxOverlayIds rows is no driver constant: its
+    // exclusions stay broadcast anti-joins built from the overlay —
+    // still never a sort-merge, and the cell prune still holds
+    import graft.operators.SimilarityOps
+    import spark.implicits._
+    SimilarityOps.dropIndexSegments(sfDir)
+    graft.GraftSession.registerFunctions(spark)
+    val root = java.nio.file.Files.createTempDirectory("graft_plan_ann_del_big_")
+    graft.util.TempDirs.track(root)
+    val ids = (0 to SimilarityOps.MaxOverlayIds).map(i => 1000000L + i).toDF("vec_id")
+    SimilarityOps.tombstoneSegmentRows(spark, sfDir, ids)
+      .write.mode("overwrite").partitionBy("cell")
+      .parquet(s"$root/epoch=0")
+    SimilarityOps.registerIndexSegments(spark, sfDir, root.toString)
+    try {
+      val p = SimilarityOps.embeddingBatchTopK(spark, sfDir,
+        SimilarityOps.QUERY_BATCH, SimilarityOps.IVF_K)
+        .queryExecution.executedPlan.toString
+      assert(p.contains("PartitionFilters: [cell#"), p)
+      assert(!p.contains("SortMergeJoin"), p)
+      assert(!p.contains("Exchange hashpartitioning(vec_id"), p)
       assert("(?s)BroadcastHashJoin.*?LeftAnti".r.findAllIn(p).size >= 2, p)
     } finally SimilarityOps.dropIndexSegments(sfDir)
   }
@@ -528,8 +559,11 @@ class PlanSpec extends SparkTestBase {
     // query cost model of a served IVF index
     assert(p.contains("PartitionFilters: [cell#"), p)
     assert(p.replaceAll("\\s+", " ").matches("(?s).*PartitionFilters: \\[cell#\\d+L? IN \\(.*"), p)
-    // and the query-side broadcast, not a shuffle of the probed cells
-    assert(p.contains("BroadcastExchange"), p)
+    // the query vector rides the plan as a literal (probed on the
+    // driver): no query-side broadcast or join, and no shuffle of the
+    // probed cells
+    assert(!p.contains("BroadcastExchange"), p)
+    assert(!p.contains("Join"), p)
     assert(!p.contains("Exchange hashpartitioning"), p)
   }
 
@@ -545,15 +579,16 @@ class PlanSpec extends SparkTestBase {
     assert(!read.contains("embedding:array"), p)
   }
 
-  test("ann_batch: one pruned scan, broadcast probe join, no per-query rescan") {
+  test("ann_batch: one pruned scan, inlined probe set, no per-query rescan") {
     val p = plan("ann_batch")
     // the whole batch is served by ONE partition-pruned index scan…
     assert(p.contains("PartitionFilters: [cell#"), p)
     assert("_ivf_idx_s".r.findAllIn(p).size === 1, p)
-    // …joined hash-side against the bounded (qid, qe, cell) probe set
-    assert(p.contains("BroadcastHashJoin"), p)
-    assert(!p.contains("BroadcastNestedLoopJoin"), p)
-    assert(!p.contains("SortMergeJoin"), p)
+    // …expanded in-row against the bounded (qid, qe, cell) probe set,
+    // which rides the plan as a literal: no join, nothing to broadcast
+    assert(p.contains("Generate inline"), p)
+    assert(!p.contains("Join"), p)
+    assert(!p.contains("BroadcastExchange"), p)
     // per-query top-k pre-prunes map-side before the qid exchange
     assert(p.contains("WindowGroupLimit"), p)
   }

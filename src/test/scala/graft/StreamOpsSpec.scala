@@ -440,6 +440,32 @@ class StreamOpsSpec extends SparkTestBase {
     assertSameRows(live, staged)
   }
 
+  test("stream_xm hashes a double-typed edge topic's endpoints as longs") {
+    // the touched-bucket hint rides the emptiness-gate count and must
+    // hash each endpoint as the merge canonicalises it (cast to long):
+    // hashing a double's "5.0" prunes the wrong doc buckets, and the
+    // merge then misses the base clusters its edges touch. A few edges
+    // into base clusters, so the pruned bucket set is small.
+    import graft.operators.DedupOps
+    import spark.implicits._
+    val clustered = spark.read.parquet(DedupOps.xmDocIdxDir(spark, sfDir).toString)
+      .select("doc_id").as[Long].collect().toSet
+    val edges = DedupOps.stagedIncrementCrossEdges(spark, sfDir)
+      .select(col("doc_a").cast("long"), col("doc_b").cast("long")).as[(Long, Long)]
+      .collect().filter { case (a, b) => clustered(a) || clustered(b) }.sorted.take(3)
+    assert(edges.nonEmpty)
+    def topic(typ: String): String = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_xm_typed_topic_")
+      graft.util.TempDirs.track(dir)
+      edges.toSeq.toDF("doc_a", "doc_b")
+        .select(col("doc_a").cast(typ), col("doc_b").cast(typ))
+        .write.mode("overwrite").parquet(dir.toString)
+      dir.toString
+    }
+    assertSameRows(StreamOps.streamCrossModalMerge(spark, sfDir, topic("double")),
+      StreamOps.streamCrossModalMerge(spark, sfDir, topic("long")))
+  }
+
   test("stream_dc equals the batch decontamination and serves a frozen probe index") {
     import graft.operators.DedupOps
     val streamed = StreamOps.streamDecontaminate(spark, sfDir)
